@@ -84,6 +84,20 @@ object GraftSession {
       .foreach(spark.catalog.dropTempView(_))
   }
 
+  /** Run `body` with session conf `key` set to `value`, then put the
+    * key back as it was — restored to its previous value, or unset if
+    * it had none — even when `body` throws. The one scoped override for
+    * query-local settings (streaming state partitions, state-store
+    * provider).
+    */
+  def withConf[A](spark: SparkSession, key: String, value: String)(
+      body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Engine optimizer rules for a live session (the
     * `spark.sql.extensions=graft.GraftExtensions` path installs the
     * same set at build time). Idempotent.

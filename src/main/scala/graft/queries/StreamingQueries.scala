@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -91,10 +91,9 @@ object StreamingQueries extends QueryGroup {
     // session pays 4× the per-batch store overhead for nothing. 8 keys
     // the overhead to the actual state size here; a real deployment
     // sizes it to projected state bytes per partition.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, prevShuffle.toInt).toString)
-    try {
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    GraftSession.withConf(spark, shuffleKey,
+        math.min(8, spark.conf.get(shuffleKey).toInt).toString) {
       val writer = df.writeStream.outputMode(mode)
         .format("memory").queryName(name)
         .trigger(Trigger.AvailableNow())
@@ -102,8 +101,6 @@ object StreamingQueries extends QueryGroup {
         .fold(writer)(c => writer.option("checkpointLocation", c))
         .start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
     spark.table(name)
   }
@@ -130,8 +127,12 @@ object StreamingQueries extends QueryGroup {
   }
 
   /** Copy slice k's staged files into the live source dir. An empty
-    * slice stages NO directory — it feeds no batch, which emits
-    * nothing, exactly what the per-slice writer's empty file produced.
+    * slice stages NO directory, so it feeds no file and fires no
+    * micro-batch. Output rows match the old per-slice writer's (its
+    * empty file fired a zero-row batch that emitted nothing), but
+    * batch-side effects do not: a handler that counts its own batches
+    * sees one batch fewer per empty slice — s22's snapshot `version`
+    * counter is one.
     */
   private def feedSlice(stage: java.io.File, in: java.io.File, k: Int): Unit =
     Option(new java.io.File(stage, s"k=$k").listFiles())
@@ -1293,6 +1294,11 @@ object StreamingQueries extends QueryGroup {
                (SELECT floor(epoch(MAX(ts))) FROM events)
              ORDER BY w_start"""))
 
+  private val stateStoreProviderKey =
+    "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** The Spark 4 arbitrary-state API (`transformWithState`,
     * successor to s09's `mapGroupsWithState`): running per-user
     * (count, max) via an explicit named ValueState. The API requires
@@ -1305,18 +1311,8 @@ object StreamingQueries extends QueryGroup {
     "s13_stream_transform_with_state",
     "transformWithState running per-user (count, max) == relational agg",
     (s, dir) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(s, stateStoreProviderKey, rocksDbProvider) {
         runToTable(Frames.s13(s, dir), "update").orderBy("user_id")
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
       }
     },
     Some("""SELECT user_id, COUNT(*) AS n, MAX(value) AS max_value
@@ -1333,19 +1329,9 @@ object StreamingQueries extends QueryGroup {
     "s14_stream_timer_sessions",
     "timer-driven sessionization (transformWithState) == session_window",
     (s, dir) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(s, stateStoreProviderKey, rocksDbProvider) {
         runToTable(Frames.s14(s, dir), "append")
           .orderBy("user_id", "session_start")
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
       }
     },
     Some(s"""WITH flagged AS (
@@ -1657,89 +1643,88 @@ object StreamingQueries extends QueryGroup {
         Option(f.listFiles()).foreach(_.foreach(rmTree))
         f.delete(); ()
       }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        // deterministic arrival slices: batch k = doc_id ≡ k (mod 3),
-        // staged in one corpus pass (admission is set-oriented per
-        // batch, so within-slice row order is free)
-        stageSlices(docs, pmod(col("doc_id"), lit(3)), stage)
-        // the shingle state starts empty WITH the right schema; the
-        // band index needs no anchor write since r18 — it is hash-
-        // BUCKETED by band_key (r17 verdict task 1; layout
-        // bucket=<hash(band_key)%B>/, appended per admitted batch),
-        // and the per-batch probe reads only the bucket dirs the
-        // batch's own band keys hash into, with this empty frame as
-        // the no-buckets-yet schema
-        val none = docs.filter(lit(false))
-        D.portableShingles(none).write.parquet(shDir)
-        val emptyBands = D.portableMinHashBands(D.portableShingles(none))
-        val admit = (batchRaw: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) => {
-          val batch = batchRaw.persist()
-          val shN = D.portableShingles(batch).persist()
-          // r16: bands ride the native per-row signature (no shingle
-          // explode / (doc, i) agg per micro-batch) — byte-identical
-          // band keys, so they append into the same standing index
-          val bandsN = D.portableMinHashBandsFromDocs(batch).persist()
-          try {
-            // per-batch admission through Frames.s20Admission — the
-            // SAME builder the PlanQualitySpec streaming sweep audits,
-            // so the audited lineage IS the executed lineage
-            // bucket-pruned index probe — admission is UNCHANGED (the
-            // prune only removes index rows whose band_key equals no
-            // batch key): the index read is bounded by the batch's own
-            // band keys times per-bucket size, not by the index size.
-            // The shingle state stays a flat read: its consumer is
-            // already candidate-semi-filtered before aggregating, and
-            // pruning its SCAN needs the candidate ids — a second
-            // probe job per batch that r18 measured at +123% sweep
-            // time at sf0.1 (OPTIMIZATION_r18.md) for a read the
-            // admission bounds anyway
-            val idxProbed = D.readProbedBuckets(s, idxDir,
-              bandsN.select(col("band_key")), emptyBands)
-            val (_, _, _, admitted) = Frames.s20Admission(batch, shN,
-              bandsN, idxProbed, s.read.parquet(shDir))
-            admitted
-              .select(pmod(col("doc_id"), lit(3)).cast("int").as("batch_no"),
-                col("doc_id"))
-              .write.mode("append").parquet(outDir)
-            // re-read the admission verdict from the output (breaks the
-            // lineage back onto the state dirs we are about to append to)
-            val admIds = s.read.parquet(outDir)
-              .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"))
-            shN.join(admIds, Seq("doc_id"), "left_semi")
-              .write.mode("append").parquet(shDir)
-            D.appendBucketed(
-              bandsN.join(admIds, Seq("doc_id"), "left_semi"), idxDir,
-              "band_key")
-          } finally {
-            bandsN.unpersist(); shN.unpersist(); batch.unpersist(); ()
-          }
-        }
-        val q = s.readStream
-          .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-          .parquet(in.getAbsolutePath)
-          .writeStream
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .foreachBatch(admit)
-          .start()
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions", "8") {
         try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
+          val docs = Tables(s, dir).documents
+          // deterministic arrival slices: batch k = doc_id ≡ k (mod 3),
+          // staged in one corpus pass (admission is set-oriented per
+          // batch, so within-slice row order is free)
+          stageSlices(docs, pmod(col("doc_id"), lit(3)), stage)
+          // the shingle state starts empty WITH the right schema; the
+          // band index needs no anchor write since r18 — it is hash-
+          // BUCKETED by band_key (r17 verdict task 1; layout
+          // bucket=<hash(band_key)%B>/, appended per admitted batch),
+          // and the per-batch probe reads only the bucket dirs the
+          // batch's own band keys hash into, with this empty frame as
+          // the no-buckets-yet schema
+          val none = docs.filter(lit(false))
+          D.portableShingles(none).write.parquet(shDir)
+          val emptyBands = D.portableMinHashBands(D.portableShingles(none))
+          val admit = (batchRaw: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              _: Long) => {
+            val batch = batchRaw.persist()
+            val shN = D.portableShingles(batch).persist()
+            // r16: bands ride the native per-row signature (no shingle
+            // explode / (doc, i) agg per micro-batch) — byte-identical
+            // band keys, so they append into the same standing index
+            val bandsN = D.portableMinHashBandsFromDocs(batch).persist()
+            try {
+              // per-batch admission through Frames.s20Admission — the
+              // SAME builder the PlanQualitySpec streaming sweep audits,
+              // so the audited lineage IS the executed lineage
+              // bucket-pruned index probe — admission is UNCHANGED (the
+              // prune only removes index rows whose band_key equals no
+              // batch key): the index read is bounded by the batch's own
+              // band keys times per-bucket size, not by the index size.
+              // The shingle state stays a flat read: its consumer is
+              // already candidate-semi-filtered before aggregating, and
+              // pruning its SCAN needs the candidate ids — a second
+              // probe job per batch that r18 measured at +123% sweep
+              // time at sf0.1 (OPTIMIZATION_r18.md) for a read the
+              // admission bounds anyway
+              val idxProbed = D.readProbedBuckets(s, idxDir,
+                bandsN.select(col("band_key")), emptyBands)
+              val (_, _, _, admitted) = Frames.s20Admission(batch, shN,
+                bandsN, idxProbed, s.read.parquet(shDir))
+              admitted
+                .select(pmod(col("doc_id"), lit(3)).cast("int").as("batch_no"),
+                  col("doc_id"))
+                .write.mode("append").parquet(outDir)
+              // re-read the admission verdict from the output (breaks the
+              // lineage back onto the state dirs we are about to append to)
+              val admIds = s.read.parquet(outDir)
+                .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
+                .select(col("doc_id"))
+              shN.join(admIds, Seq("doc_id"), "left_semi")
+                .write.mode("append").parquet(shDir)
+              D.appendBucketed(
+                bandsN.join(admIds, Seq("doc_id"), "left_semi"), idxDir,
+                "band_key")
+            } finally {
+              bandsN.unpersist(); shN.unpersist(); batch.unpersist(); ()
+            }
           }
-        } finally q.stop()
-        s.read.parquet(outDir).orderBy("doc_id").localCheckpoint()
-      } finally {
-        // localCheckpoint has materialized the result, so the staged
-        // input + state trees are safe to drop — and dropping them in
-        // the finally (the s22 fix, applied to its sibling) means a
-        // failed run doesn't leak a temp tree holding corpus copies
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          val q = s.readStream
+            .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+            .parquet(in.getAbsolutePath)
+            .writeStream
+            .option("checkpointLocation", sub("ckpt").getAbsolutePath)
+            .foreachBatch(admit)
+            .start()
+          try {
+            (0 to 2).foreach { k =>
+              feedSlice(stage, in, k)
+              q.processAllAvailable()
+            }
+          } finally q.stop()
+          s.read.parquet(outDir).orderBy("doc_id").localCheckpoint()
+        } finally {
+          // localCheckpoint has materialized the result, so the staged
+          // input + state trees are safe to drop — and dropping them in
+          // the finally (the s22 fix, applied to its sibling) means a
+          // failed run doesn't leak a temp tree holding corpus copies
+          rmTree(base)
+        }
       }
     },
     Some("""WITH d AS (
@@ -1886,57 +1871,56 @@ object StreamingQueries extends QueryGroup {
         Option(f.listFiles()).foreach(_.foreach(rmTree))
         f.delete(); ()
       }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        val baseSnap = docs.select(col("doc_id"), col("text"))
-        baseSnap.write.parquet(snapDir(0))
-        // deterministic arrival slices of the n69 changeset, staged in
-        // one pass (changeset application is keyed per batch, so
-        // within-slice row order is free)
-        val changes = NorthStar4.mergeChangeset(docs)
-        stageSlices(changes, pmod(col("doc_id"), lit(3)), stage)
-        var version = 0
-        val apply = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) => {
-          if (!batch.isEmpty) {
-            val cur = s.read.parquet(snapDir(version))
-            // Frames.s22Apply is the SAME builder the plan audit
-            // checks, so audit and execution cannot drift
-            Frames.s22Apply(cur, batch)
-              .write.parquet(snapDir(version + 1))
-            version += 1
-          }
-        }
-        val q = s.readStream
-          .schema("doc_id LONG, op STRING, text STRING")
-          .parquet(in.getAbsolutePath)
-          .writeStream
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .foreachBatch(apply)
-          .start()
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions", "8") {
         try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
+          val docs = Tables(s, dir).documents
+          val baseSnap = docs.select(col("doc_id"), col("text"))
+          baseSnap.write.parquet(snapDir(0))
+          // deterministic arrival slices of the n69 changeset, staged in
+          // one pass (changeset application is keyed per batch, so
+          // within-slice row order is free)
+          val changes = NorthStar4.mergeChangeset(docs)
+          stageSlices(changes, pmod(col("doc_id"), lit(3)), stage)
+          var version = 0
+          val apply = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              _: Long) => {
+            if (!batch.isEmpty) {
+              val cur = s.read.parquet(snapDir(version))
+              // Frames.s22Apply is the SAME builder the plan audit
+              // checks, so audit and execution cannot drift
+              Frames.s22Apply(cur, batch)
+                .write.parquet(snapDir(version + 1))
+              version += 1
+            }
           }
-        } finally q.stop()
-        // final snapshot classified against the original base — for
-        // this changeset (upserts always change the text) the diff
-        // labels coincide with n69's per-op provenance, which is what
-        // lets both queries share one oracle
-        val fin = s.read.parquet(snapDir(version))
-        val res = Frames.s22Classify(fin, baseSnap)
-          .orderBy("doc_id")
-          .localCheckpoint()
-        res
-      } finally {
-        // localCheckpoint has materialized the result, so the snapshot
-        // tree is safe to drop — and dropping it HERE (not after the
-        // try) means failed runs don't accumulate tmp copies
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          val q = s.readStream
+            .schema("doc_id LONG, op STRING, text STRING")
+            .parquet(in.getAbsolutePath)
+            .writeStream
+            .option("checkpointLocation", sub("ckpt").getAbsolutePath)
+            .foreachBatch(apply)
+            .start()
+          try {
+            (0 to 2).foreach { k =>
+              feedSlice(stage, in, k)
+              q.processAllAvailable()
+            }
+          } finally q.stop()
+          // final snapshot classified against the original base — for
+          // this changeset (upserts always change the text) the diff
+          // labels coincide with n69's per-op provenance, which is what
+          // lets both queries share one oracle
+          val fin = s.read.parquet(snapDir(version))
+          val res = Frames.s22Classify(fin, baseSnap)
+            .orderBy("doc_id")
+            .localCheckpoint()
+          res
+        } finally {
+          // localCheckpoint has materialized the result, so the snapshot
+          // tree is safe to drop — and dropping it HERE (not after the
+          // try) means failed runs don't accumulate tmp copies
+          rmTree(base)
+        }
       }
     },
     Some(NorthStar4.mergeOracleSql))
@@ -2040,37 +2024,36 @@ object StreamingQueries extends QueryGroup {
         Option(f.listFiles()).foreach(_.foreach(rmTree))
         f.delete(); ()
       }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        // contiguous id-range arrival slices: per-source arrival order
-        // is doc_id order — the order the oracle's window sums in
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val cut = maxId / 3 + 1
-        // one staging pass; slice k = doc_id div cut — the old range
-        // filter solved for k (the quota handler sorts by id in-batch,
-        // so within-slice row order is free)
-        stageSlices(docs, expr(s"doc_id div ${cut}L"), stage)
-        val out = Frames.s25Quota(s, s.readStream
-          .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(in.getAbsolutePath))
-        val qn = s"graft_stream_${counter.incrementAndGet()}"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(qn)
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .start()
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions", "8") {
         try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table(qn).orderBy("doc_id").localCheckpoint()
-      } finally {
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          val docs = Tables(s, dir).documents
+          // contiguous id-range arrival slices: per-source arrival order
+          // is doc_id order — the order the oracle's window sums in
+          val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+          val cut = maxId / 3 + 1
+          // one staging pass; slice k = doc_id div cut — the old range
+          // filter solved for k (the quota handler sorts by id in-batch,
+          // so within-slice row order is free)
+          stageSlices(docs, expr(s"doc_id div ${cut}L"), stage)
+          val out = Frames.s25Quota(s, s.readStream
+            .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(in.getAbsolutePath))
+          val qn = s"graft_stream_${counter.incrementAndGet()}"
+          val q = out.writeStream.outputMode("append")
+            .format("memory").queryName(qn)
+            .option("checkpointLocation", sub("ckpt").getAbsolutePath)
+            .start()
+          try {
+            (0 to 2).foreach { k =>
+              feedSlice(stage, in, k)
+              q.processAllAvailable()
+            }
+          } finally q.stop()
+          s.table(qn).orderBy("doc_id").localCheckpoint()
+        } finally {
+          rmTree(base)
+        }
       }
     },
     Some("""SELECT doc_id, source, n_tokens, start_off,
@@ -2252,56 +2235,55 @@ object StreamingQueries extends QueryGroup {
         Option(f.listFiles()).foreach(_.foreach(rmTree))
         f.delete(); ()
       }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val ev = Tables(s, dir).events
-          .select(col("event_id"), col("ts"), col("event_type"),
-            col("value"))
-        // contiguous ts-range arrival slices: cross-slice arrival
-        // order IS event-time order (CUSUM's contract)
-        val Array(lo, hi) = ev
-          .agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
-          .head().toSeq.map(_.asInstanceOf[Long]).toArray
-        val cut = (hi - lo) / 3 + 1
-        // one staging pass; slice k = (tsm − lo) div cut — the old
-        // range filter solved for k (the CUSUM handler sorts by
-        // (tsm, event_id) in-batch, so within-slice row order is free)
-        stageSlices(ev,
-          expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), stage)
-        val schema = s.read
-          .parquet(new java.io.File(stage, "k=0").getAbsolutePath).schema
-        val out = Frames.s31Path(s,
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(in.getAbsolutePath))
-        val qn = s"graft_stream_${counter.incrementAndGet()}"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(qn)
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .start()
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions", "8") {
         try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        // batch-aggregate the emitted path into n107's alarm report
-        s.table(qn)
-          .groupBy("event_type")
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(when(col("s") > 500000000L, 1L).otherwise(0L))
-              .as("n_alarms"),
-            timestamp_micros(
-              min(when(col("s") > 500000000L, col("tsm"))))
-              .as("first_alarm_ts"),
-            max(col("s")).as("max_cusum_micro"))
-          .orderBy("event_type")
-          .localCheckpoint()
-      } finally {
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          val ev = Tables(s, dir).events
+            .select(col("event_id"), col("ts"), col("event_type"),
+              col("value"))
+          // contiguous ts-range arrival slices: cross-slice arrival
+          // order IS event-time order (CUSUM's contract)
+          val Array(lo, hi) = ev
+            .agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
+            .head().toSeq.map(_.asInstanceOf[Long]).toArray
+          val cut = (hi - lo) / 3 + 1
+          // one staging pass; slice k = (tsm − lo) div cut — the old
+          // range filter solved for k (the CUSUM handler sorts by
+          // (tsm, event_id) in-batch, so within-slice row order is free)
+          stageSlices(ev,
+            expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), stage)
+          val schema = s.read
+            .parquet(new java.io.File(stage, "k=0").getAbsolutePath).schema
+          val out = Frames.s31Path(s,
+            s.readStream.schema(schema)
+              .option("pathGlobFilter", "*.parquet")
+              .parquet(in.getAbsolutePath))
+          val qn = s"graft_stream_${counter.incrementAndGet()}"
+          val q = out.writeStream.outputMode("append")
+            .format("memory").queryName(qn)
+            .option("checkpointLocation", sub("ckpt").getAbsolutePath)
+            .start()
+          try {
+            (0 to 2).foreach { k =>
+              feedSlice(stage, in, k)
+              q.processAllAvailable()
+            }
+          } finally q.stop()
+          // batch-aggregate the emitted path into n107's alarm report
+          s.table(qn)
+            .groupBy("event_type")
+            .agg(
+              count(lit(1)).as("n_events"),
+              sum(when(col("s") > 500000000L, 1L).otherwise(0L))
+                .as("n_alarms"),
+              timestamp_micros(
+                min(when(col("s") > 500000000L, col("tsm"))))
+                .as("first_alarm_ts"),
+              max(col("s")).as("max_cusum_micro"))
+            .orderBy("event_type")
+            .localCheckpoint()
+        } finally {
+          rmTree(base)
+        }
       }
     },
     Some(NorthStar7.cusumOracleSql))

@@ -52,21 +52,23 @@ object BenchGuard {
     */
   private[graft] val queryName = """^[cnqsw]\d+_""".r
 
-  /** Per-breach verdict shape inside the storm object's breaches map:
-    * `"name":{"sentinel":[…]…,"verdict":"…","evidence":"…"}`. Breach
-    * objects are nesting-free and keep verdict/evidence last
-    * (Bench.jsonLine pins that order), so scanning to the next
-    * `"verdict"` without crossing a closing brace is exact. A replay
-    * that finds a surviving breach over budget reports the artifact's
-    * own adjudication beside the failure — the round record then
-    * distinguishes "gate defect" from "host defect" by itself.
+  /** The artifact's flat `"calibration":{…}` object (Bench.calibrate
+    * readings plus `ratio` against the committed record); empty when
+    * the artifact predates it or a clip cut it.
     */
-  private val breachVerdict =
-    """"([A-Za-z0-9_]+)":\{"sentinel":\[[^{}]*"verdict":"([a-z_]+)"""".r
+  private val calibrationObj = """"calibration":\{([^{}]*)\}""".r
 
-  private[graft] def extractVerdicts(content: String): Map[String, String] =
-    breachVerdict.findAllMatchIn(content.replace("\\\"", "\""))
-      .map(m => m.group(1) -> m.group(2)).toMap
+  private[graft] def extractCalibration(content: String): Map[String, Double] =
+    calibrationObj.findFirstMatchIn(content.replace("\\\"", "\""))
+      .map(m => parseFlat(m.group(1))).getOrElse(Map.empty)
+
+  /** One over-budget problem; the artifact's calibration ratio rides
+    * beside it so a reader sees whether the whole host moved.
+    */
+  private[graft] def overBudgetLine(
+      name: String, secs: Double, ceiling: Double, ratio: Option[Double]): String =
+    f"$name OVER BUDGET: ${secs}%.2fs > ceiling ${ceiling}%.2fs" +
+      ratio.map(r => f" — calibration ratio ${r}%.2f").getOrElse("")
 
   /** The registry size the artifact's run timed (`"n_queries":N`,
     * emitted in the fixed-size suffix after the queries map so tail
@@ -107,15 +109,16 @@ object BenchGuard {
           "full verdict)"
       else "")
 
-  /** Retimed-entry shape: `"name":{"first":X,"retry":Y…}`. The final
-    * fallback when a clip leaves no flat query pair at all (r12's
-    * committed artifact: the clip landed INSIDE "retimed" back when
-    * "queries" preceded it). The confirmed timing is min(first, retry)
-    * — exactly what Bench.run records in "queries" for a retimed
-    * query, so a replay from these entries judges the same numbers.
+  /** Retimed-entry shape: `"name":{"first":X,"retry":Y[,"retry2":Z]…}`.
+    * The final fallback when a clip leaves no flat query pair at all
+    * (r12's committed artifact: the clip landed INSIDE "retimed" back
+    * when "queries" preceded it). The confirmed timing is the minimum
+    * of the entry's times — exactly what Bench.run records in "queries"
+    * for a retimed query, so a replay from these entries judges the
+    * same numbers.
     */
   private val retimedPair =
-    """"([A-Za-z0-9_]+)"\s*:\s*\{"first":(-?[0-9.]+),"retry":(-?[0-9.]+)""".r
+    """"([A-Za-z0-9_]+)"\s*:\s*\{"first":(-?[0-9.]+),"retry":(-?[0-9.]+)(?:,"retry2":(-?[0-9.]+))?""".r
 
   /** Pull the {"queries":{...}} object out of a full Bench output line
     * (or a driver BENCH_r*.json whose `tail` embeds that line with
@@ -127,7 +130,7 @@ object BenchGuard {
     *   1. complete "queries" object → parse exactly its pairs;
     *   2. clipped → every query-shaped flat name:number pair found —
     *      a partial check beats a crash or no check;
-    *   3. still nothing → the retimed entries' min(first, retry).
+    *   3. still nothing → the retimed entries' minimum time.
     * Returns EMPTY (never throws) when no fallback finds a timing —
     * the caller owns the clean-failure message (the r12 `require`
     * here turned an unreplayable artifact into a stack trace).
@@ -167,7 +170,7 @@ object BenchGuard {
       retimedPair.findAllMatchIn(norm)
         .filter(_.end < norm.length)
         .map(m => m.group(1) ->
-          math.min(m.group(2).toDouble, m.group(3).toDouble))
+          (2 to 4).flatMap(i => Option(m.group(i))).map(_.toDouble).min)
         .filter(p => queryName.findFirstIn(p._1).isDefined)
         .toMap
     }
@@ -179,7 +182,7 @@ object BenchGuard {
     require(budgets.nonEmpty, s"$budgetFile parsed empty")
     val registry = SparkEntry.queries.keySet
 
-    val (times, errors, replay, verdicts, nQueries) = args.headOption match {
+    val (times, errors, replay, ratio, nQueries) = args.headOption match {
       case Some(artifact) =>
         val content = Files.readString(Paths.get(artifact))
         val qs = extractQueries(content)
@@ -192,33 +195,29 @@ object BenchGuard {
             "bench_last.json instead")
           sys.exit(1)
         }
-        (qs, Map.empty[String, String], true, extractVerdicts(content),
-          extractNQueries(content))
+        (qs, Map.empty[String, String], true,
+          extractCalibration(content).get("ratio"), extractNQueries(content))
       case None =>
         val sfDir =
           sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         val spark = GraftSession.build("graft-bench-guard")
         // Bench.run is SELF-CONFIRMING since round 7: any first-pass
-        // timing over its committed ceiling is re-timed once in
-        // isolation inside run() itself and the minimum kept (the
-        // BenchOne min-of-reps policy) — so the driver's Bench main and
-        // this gate adjudicate noise flaps identically, and the
-        // artifact's "retimed" object records both numbers.
-        val (results, meta) = try Bench.runWithMeta(spark, sfDir)
+        // timing over its committed ceiling is re-timed inside run()
+        // itself by the fixed Bench.confirm policy and the minimum kept
+        // — so the driver's Bench main and this gate adjudicate noise
+        // flaps identically, and the artifact's "retimed" object
+        // records every number.
+        val (results, cal) = try Bench.run(spark, sfDir)
           finally spark.stop()
         // emit the bench artifact too — the timing run that backs the
         // verdict should never be thrown away; the file copy survives
         // stdout clipping (see Bench.writeArtifact)
-        val line = Bench.jsonLine(results, sfDir, Some(meta))
+        val line = Bench.jsonLine(results, sfDir, Some(cal))
         println(line)
         Bench.writeArtifact(line)
         (results.map(r => r.name -> r.secs).toMap,
           results.collect { case t if t.err.isDefined => t.name -> t.err.get }
-            .toMap, false,
-          results.collect {
-            case t if t.storm.exists(_.verdict.isDefined) =>
-              t.name -> t.storm.get.verdict.get
-          }.toMap, results.size)
+            .toMap, false, cal.ratio, results.size)
     }
 
     val problems = Seq.newBuilder[String]
@@ -235,10 +234,7 @@ object BenchGuard {
     times.toSeq.sorted.foreach { case (n, t) =>
       budgets.get(n).foreach { b =>
         if (t < 0) problems += s"$n recorded -1 (failed)"
-        else if (t > b)
-          problems += f"$n OVER BUDGET: ${t}%.2fs > ceiling ${b}%.2fs" +
-            verdicts.get(n).map(v =>
-              s" — artifact verdict: $v").getOrElse("")
+        else if (t > b) problems += overBudgetLine(n, t, b, ratio)
       }
     }
 

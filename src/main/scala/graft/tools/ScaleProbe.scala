@@ -481,16 +481,15 @@ object ScaleProbe {
       val name = s"scale_probe_${streamN.incrementAndGet()}"
       // state-partition sizing per docs/PLANS.md "Streaming
       // state-partition sizing" — same policy as the s* queries
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, prev.toInt).toString)
-      try {
+      val shuffleKey = "spark.sql.shuffle.partitions"
+      GraftSession.withConf(spark, shuffleKey,
+          math.min(8, spark.conf.get(shuffleKey).toInt).toString) {
         val w = df.writeStream.outputMode(mode)
           .format("memory").queryName(name)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         val q = ckpt.fold(w)(cl => w.option("checkpointLocation", cl)).start()
         q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       val n = spark.table(name).count()
       spark.catalog.dropTempView(name)
       n

@@ -60,26 +60,31 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("round-trip: a 241-query jsonLine clipped to its last 2kB still yields timings") {
     // the r12 failure, pinned: the driver keeps only the final ~2 kB of
-    // stdout, and that round's grown retimed+storm receipts pushed the
-    // whole queries map out of the tail — BenchGuard crashed on the
+    // stdout, and that round's grown retimed and host receipts pushed
+    // the whole queries map out of the tail — BenchGuard crashed on the
     // committed artifact. The key-order contract (queries second-to-
     // last, value last) means ANY tail clip now lands inside the
-    // queries map; this round-trips a registry-sized line with
-    // r12-sized receipts through exactly that clip.
+    // queries map; this round-trips a registry-sized line with fully
+    // retimed entries and a calibration object through exactly that clip.
     val plain = (1 to 229).map(i =>
       Bench.Timing(f"n$i%03d_synthetic_query_name", i / 100.0))
     val probe = Some(Bench.GcProbe(12345, 5.678))
     val flapped = (1 to 12).map(i =>
       Bench.Timing(f"s$i%02d_retimed_query_name", 2.0,
-        firstPass = Some(9.987), retry = Some(2.0),
-        gc = probe, retryGc = probe,
-        storm = Some(Bench.StormEvidence(Seq(0.648, 0.871, 0.112), 2,
-          Some(2.0)))))
-    val meta = Bench.SweepMeta("proc_external_busy", 0.021,
-      Seq(0.021, 0.034, 0.029),
-      Seq("start" -> 0.02, "mid" -> 0.31, "end" -> 0.025))
+        firstPass = Some(9.987), retry = Some(8.765),
+        gc = probe, retryGc = probe, retry2 = Some(2.0), retry2Gc = probe))
+    val cal = Bench.Calibration(Seq("spin_start" -> 0.21,
+      "scan_start" -> 0.34, "spin_mid" -> 0.22, "scan_mid" -> 0.35,
+      "spin_end" -> 0.21, "scan_end" -> 0.36), Some(1.042))
     val results = plain ++ flapped
-    val line = Bench.jsonLine(results, "/root/testdata/sf0.1", Some(meta))
+    val line = Bench.jsonLine(results, "/data/sf0.1", Some(cal))
+    assert(line.indexOf("\"calibration\":{") < line.indexOf("\"queries\":{"),
+      "calibration must precede the queries map")
+    assert(line.indexOf("\"queries\":{") > line.lastIndexOf("\"retry2\":"),
+      "queries must be the last object")
+    assert(("\"queries\":\\{[^{}]*\\},\"n_queries\":" + results.size +
+      ",\"value\":[0-9.]+\\}$").r.findFirstIn(line).isDefined,
+      s"queries, n_queries, value must close the line: ${line.takeRight(60)}")
     val full = BenchGuard.extractQueries(line)
     assert(full.size == results.size, "full line must carry every query")
     val clipped = line.takeRight(2048)
@@ -131,113 +136,107 @@ class BenchGuardSpec extends AnyFunSuite {
       "BenchGuard: 1 problem(s) across 268/268 checked queries")
   }
 
-  test("extractVerdicts reads per-breach adjudications out of the storm object") {
-    val flapped = Bench.Timing("n57_dedup_keep_best", 33.66,
-      firstPass = Some(33.66), retry = Some(45.64),
-      gc = Some(Bench.GcProbe(210, 4.1)),
-      retryGc = Some(Bench.GcProbe(5310, 9.8)),
-      storm = Some(Bench.StormEvidence(
-        Seq(0.0, 0.001), 0, None, Seq(0.0, 0.0), Seq(4.2, 0.1),
-        retry2 = Some(41.2), retry2Gc = Some(Bench.GcProbe(4900, 9.1)),
-        verdict = Some("environmental_suspected"),
-        evidence = Some("kernel memory PSI avg10 4.20% during breach"))))
-    val quiet = Bench.Timing("n22_ok", 2.0, firstPass = Some(9.0),
-      retry = Some(2.0), storm = Some(Bench.StormEvidence(
-        Seq(0.0), 0, None, Seq(0.0), Seq(0.0), retry2 = Some(2.0))))
-    val line = Bench.jsonLine(Seq(flapped, quiet), "/sf",
-      Some(Bench.SweepMeta("proc_external_busy", 0.0, Seq(0.0),
-        Seq("start" -> 0.0, "start_io" -> 0.0, "start_mem" -> 0.0))))
-    assert(BenchGuard.extractVerdicts(line) ==
-      Map("n57_dedup_keep_best" -> "environmental_suspected"),
-      "only the surviving breach carries a verdict; the rescued flap " +
-        "must not inherit its neighbor's")
-    // the verdict fields must not corrupt timing extraction
+  test("an over-budget line carries the artifact's calibration ratio") {
+    val breach = Bench.Timing("n57_dedup_keep_best", 33.66,
+      firstPass = Some(33.66), retry = Some(45.64), retry2 = Some(41.2))
+    val line = Bench.jsonLine(Seq(breach, Bench.Timing("n22_ok", 2.0)), "/sf",
+      Some(Bench.Calibration(Seq("spin_start" -> 0.26, "scan_start" -> 0.41),
+        Some(1.31))))
+    val ratio = BenchGuard.extractCalibration(line).get("ratio")
+    assert(ratio == Some(1.31))
+    assert(BenchGuard.overBudgetLine("n57_dedup_keep_best", 33.66, 27.5, ratio)
+      == "n57_dedup_keep_best OVER BUDGET: 33.66s > ceiling 27.50s " +
+        "— calibration ratio 1.31")
+    // an artifact without calibration (every pre-existing record) keeps
+    // the old line, suffix-free
+    assert(BenchGuard.extractCalibration(
+      """{"queries":{"n01_x":1.0},"value":1.0}""").get("ratio").isEmpty)
+    assert(BenchGuard.overBudgetLine("n01_x", 3.0, 2.5, None) ==
+      "n01_x OVER BUDGET: 3.00s > ceiling 2.50s")
+    // the calibration and retry2 fields must not corrupt timing extraction
     assert(BenchGuard.extractQueries(line) ==
       Map("n57_dedup_keep_best" -> 33.66, "n22_ok" -> 2.0))
   }
 
-  test("adjudicateBreach: the four environmental signals and the regression default") {
-    def verdict(times: Seq[Double] = Seq(10.0, 10.5), gcMs: Long = 300,
-        wall: Double = 10.0, ext: Double = 0.01, psi: Double = 0.0,
-        stormed: Boolean = false): String =
-      Bench.adjudicateBreach(times, gcMs, wall, ext, psi, stormed)._1
-    // 1. CPU storm observed
-    assert(verdict(ext = 0.82, stormed = true) == "environmental_suspected")
-    // 2. kernel memory PSI — the r13 n57 mode's missing signal
-    assert(verdict(psi = 4.2) == "environmental_suspected")
-    // 3. gc-bound retry — the n89 fingerprint (5.65s GC on 43s wall)
-    assert(verdict(times = Seq(48.0, 43.1), gcMs = 5651, wall = 43.1)
-      == "environmental_suspected")
-    // 4. unstable retries under quiet sentinels
-    assert(verdict(times = Seq(33.7, 45.6, 12.1)) ==
-      "environmental_suspected")
-    // default: quiet host, stable timings, healthy gc → the code owns it
-    assert(verdict() == "regression_suspected")
-    // small-but-real gc on a short query is NOT the memory fingerprint
-    assert(verdict(times = Seq(4.0, 4.1), gcMs = 900, wall = 4.0) ==
-      "regression_suspected")
+  test("extractQueries never reads a calibration key as a query timing") {
+    val cal = Bench.Calibration(Seq("spin_start" -> 0.2, "scan_start" -> 0.3,
+      "spin_mid" -> 0.2, "scan_mid" -> -1.0), Some(0.97))
+    val line = Bench.jsonLine(Seq(Bench.Timing("q01_pricing_summary", 2.5),
+      Bench.Timing("s03_stream_dedup", 1.5)), "/sf", Some(cal))
+    assert(BenchGuard.extractQueries(line) ==
+      Map("q01_pricing_summary" -> 2.5, "s03_stream_dedup" -> 1.5))
+    // truncated fallback: clip inside the queries map, so every
+    // name:number pair in the content is a candidate — calibration
+    // readings (scan_*/spin_*, ratio) included
+    val clipped = line.take(line.indexOf("\"s03_stream_dedup\""))
+    assert(clipped.contains("\"scan_start\":0.300"))
+    assert(BenchGuard.extractQueries(clipped) ==
+      Map("q01_pricing_summary" -> 2.5))
+    // clip inside the calibration object itself: no query pair survives,
+    // and the readings still do not pass for timings
+    val calOnly = line.take(line.indexOf("\"spin_mid\""))
+    assert(BenchGuard.extractQueries(calOnly).isEmpty)
   }
 
-  test("adjudicateBreach rule 5: the r14 s33 false-regression episode") {
-    // the driver's closing r14 sweep, verbatim: s33 timings
-    // {5.32, 3.53, 5.91}, gc 170 ms, ext 0.027, psi 0, no storm —
-    // spread 1.67x slipped under rule 4 and the round record shipped
-    // regression_suspected while the committed bench_last.json read
-    // 1.40 s one lookup away (judge cold re-time: 1.52 s)
-    val (v, e) = Bench.adjudicateBreach(Seq(5.32, 3.53, 5.91), 170, 3.53,
-      0.027, 0.0, stormed = false, healthy = Some(1.40))
-    assert(v == "environmental_suspected", e)
-    assert(e.contains("bench_last.json") && e.contains("1.40"), e)
-    // without the on-disk evidence the same inputs still default to the
-    // plan — the new RULE, not a threshold retune, flips the verdict
-    assert(Bench.adjudicateBreach(Seq(5.32, 3.53, 5.91), 170, 3.53,
-      0.027, 0.0, stormed = false)._1 == "regression_suspected")
-    // a STABLE slow reproduction stays a regression even when the
-    // committed reading is far lower: spread ~1.0 fails the wobble
-    // guard (a real plan change reproduces at a stable slow time)
-    assert(Bench.adjudicateBreach(Seq(7.0, 7.1, 6.9), 170, 6.9,
-      0.01, 0.0, stormed = false, healthy = Some(3.4))._1 ==
-      "regression_suspected")
-    // marginal breach inside 1.8x of the committed reading: the band
-    // does not excuse it — ceiling derivation owns honest margins
-    assert(Bench.adjudicateBreach(Seq(3.6, 3.5, 3.6), 170, 3.5,
-      0.01, 0.0, stormed = false, healthy = Some(3.0))._1 ==
-      "regression_suspected")
+  test("confirm: 0 re-times under the ceiling, at most 2 over it, min kept") {
+    def drive(first: Double, retimes: Double*): (Bench.Timing, Int, Int) = {
+      val it = retimes.iterator
+      var calls = 0
+      var coolDowns = 0
+      val t = Bench.confirm(Bench.Timing("q01_x", first), 5.0,
+        () => { calls += 1; (it.next(), None) }, () => coolDowns += 1)
+      (t, calls, coolDowns)
+    }
+    // at or under the ceiling: untouched, no re-time
+    val (under, c0, _) = drive(5.0)
+    assert(c0 == 0 && under == Bench.Timing("q01_x", 5.0))
+    // over, isolated re-time rescues: one re-time, no cool-down
+    val (rescued, c1, w1) = drive(9.0, 2.0)
+    assert(c1 == 1 && w1 == 0 && rescued.secs == 2.0)
+    assert(rescued.firstPass == Some(9.0) && rescued.retry == Some(2.0) &&
+      rescued.retry2.isEmpty)
+    // still over: cool-down, one spaced re-time, minimum of three kept
+    val (spaced, c2, w2) = drive(9.0, 7.0, 4.0)
+    assert(c2 == 2 && w2 == 1 && spaced.secs == 4.0 &&
+      spaced.retry2 == Some(4.0))
+    val (stands, c3, _) = drive(6.5, 8.0, 7.0)
+    assert(c3 == 2 && stands.secs == 6.5, "a real breach stays over")
+    // a failed first pass is never re-timed
+    val failed = Bench.Timing("q01_x", -1.0, err = Some("boom"))
+    assert(Bench.confirm(failed, 5.0, () => fail("re-timed a failure")) ==
+      failed)
   }
 
-  test("adjudicateBreach rule 5: the r15 s27 degraded-sweep episode") {
-    // the r15 failing sweep, verbatim: s27 {21.18, 21.63} — STABLE
-    // (spread 1.1x, so the healthy-band wobble guard rightly refuses),
-    // quiet sentinels, committed reading 11.44 — inside a sweep whose
-    // median completed query ran ~1.3x its committed reading (total
-    // 607s vs 450s; q01 4.26 vs 2.96). Judge-style fresh-JVM cold
-    // min-of-3 immediately after: 11.0s. The sweep-pace channel is the
-    // evidence that separates a persistent degraded window from a
-    // genuine stable regression.
-    val (v, e) = Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44),
-      sweepMedianRatio = Some(1.30))
-    assert(v == "environmental_suspected", e)
-    assert(e.contains("degraded sweep") && e.contains("1.30"), e)
-    // the SAME stable inputs in a healthy-pace sweep stay a regression
-    // — a real single-query regression cannot move the sweep median
-    assert(Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44),
-      sweepMedianRatio = Some(1.02))._1 == "regression_suspected")
-    // and with no pace evidence at all (< 20 samples) the default holds
-    assert(Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44))._1 ==
-      "regression_suspected")
+  test("sweepOrder: pinned names keep their slots, unknown names run last by name") {
+    // Bench.sweepOrder reads sweep_order.json from the working
+    // directory; registered-but-unpinned names (a hypothetical fresh
+    // query) must sort AFTER every pinned one, alphabetically among
+    // themselves — the no-reshuffle growth contract
+    val pinnedFirst = Bench.sweepOrder(
+      Seq("zz_unpinned_b", "c01_map_project", "zz_unpinned_a",
+        "q01_pricing_summary"))
+    assert(pinnedFirst.take(2) ==
+      Seq("c01_map_project", "q01_pricing_summary"),
+      s"pinned slots must lead: $pinnedFirst")
+    assert(pinnedFirst.drop(2) == Seq("zz_unpinned_a", "zz_unpinned_b"),
+      s"unpinned names must trail in name order: $pinnedFirst")
   }
 
   test("a clip with no flat query pair falls back to retimed first/retry minima") {
     // the r12 committed-artifact shape: the tail window held only the
     // retimed object — name:{...} entries the flat-pair regex correctly
-    // refuses. The last-resort fallback reads min(first, retry), which
-    // is exactly the confirmed value Bench.run recorded in "queries".
+    // refuses. The last-resort fallback reads the entry's minimum,
+    // which is exactly the confirmed value Bench.run recorded in
+    // "queries".
     val tail = """st_gc_ms":512},"retimed":{"n58_three_stage_curation":{"first":108.7,"retry":12.1,"first_gc_ms":88},"w03_session_windows":{"first":5.04,"retry":3.02}},"storm":{"kind":"jvm_range_sum","baseline":0.112}"""
     assert(BenchGuard.extractQueries(tail) == Map(
       "n58_three_stage_curation" -> 12.1, "w03_session_windows" -> 3.02))
+    // current entries carry the spaced re-time too
+    val spaced = Bench.jsonLine(Seq(Bench.Timing("n89_x", 4.0,
+      firstPass = Some(9.0), retry = Some(7.0), retry2 = Some(4.0))), "/sf")
+    val retimedOnly = spaced.substring(spaced.indexOf("\"retimed\""),
+      spaced.indexOf("\"queries\""))
+    assert(BenchGuard.extractQueries(retimedOnly) == Map("n89_x" -> 4.0))
   }
 
   test("no timings in any recoverable shape returns empty, never throws") {
