@@ -12,7 +12,8 @@ object Bench {
     * policy ([[confirm]]) re-timed it and the minimum was kept —
     * `firstPass`/`retry`/`retry2` record every number so the artifact
     * itself shows whether a breach was noise (a re-time far under) or
-    * real (every re-time also over).
+    * real (every re-time also over). `profile`/`retryProfile`/
+    * `retry2Profile` are the [[QueryProfile]] of each timed pass.
     */
   final case class Timing(
       name: String,
@@ -20,18 +21,10 @@ object Bench {
       err: Option[String] = None,
       firstPass: Option[Double] = None,
       retry: Option[Double] = None,
-      gc: Option[GcProbe] = None,
-      retryGc: Option[GcProbe] = None,
+      profile: Option[Map[String, Double]] = None,
+      retryProfile: Option[Map[String, Double]] = None,
       retry2: Option[Double] = None,
-      retry2Gc: Option[GcProbe] = None)
-
-  /** JVM-pressure evidence captured around one timed section: GC time
-    * spent DURING the window and used heap at its end (before the
-    * harness-hygiene cache drop). The shared-JVM debt story — which
-    * adjudicates first-pass flaps like r8's 41 s n44 — rides these
-    * numbers instead of prose inference.
-    */
-  final case class GcProbe(gcMs: Long, heapGb: Double)
+      retry2Profile: Option[Map[String, Double]] = None)
 
   /** Host-speed reference for one sweep: `readings` are the labelled
     * [[calibrate]] timings (`spin_start`, `scan_start`, … `scan_end`,
@@ -43,16 +36,6 @@ object Bench {
     */
   final case class Calibration(
       readings: Seq[(String, Double)], ratio: Option[Double])
-
-  private def gcTotalMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private def usedHeapGb(): Double =
-    java.lang.management.ManagementFactory.getMemoryMXBean
-      .getHeapMemoryUsage.getUsed / 1e9
 
   /** Committed per-query ceilings (bench_budget.json), read from the
     * working directory — used only to decide which first-pass timings
@@ -124,14 +107,15 @@ object Bench {
     * A re-time that throws counts as the first pass again.
     */
   private[graft] def confirm(first: Timing, ceiling: Double,
-      retime: () => (Double, Option[GcProbe]),
+      retime: () => (Double, Map[String, Double]),
       coolDown: () => Unit = () => Thread.sleep(coolDownMs)): Timing = {
     val t = first.secs
     if (first.err.isDefined || t < 0 || t <= ceiling) first
     else {
       val n = first.name
-      def attempt(): (Double, Option[GcProbe]) =
-        try retime() catch { case _: Throwable => (t, None) }
+      def attempt(): (Double, Option[Map[String, Double]]) =
+        try { val (r, p) = retime(); (r, Some(p)) }
+        catch { case _: Throwable => (t, None) }
       val (r, rp) = attempt()
       println(f"Bench: $n first-pass ${t}%.2fs over its ${ceiling}%.2fs " +
         f"ceiling — isolated re-time ${r}%.2fs (min kept)")
@@ -145,8 +129,8 @@ object Bench {
           Some(s)
         }
       first.copy(secs = (Seq(t, r) ++ spaced.map(_._1)).min,
-        firstPass = Some(t), retry = Some(r), retryGc = rp,
-        retry2 = spaced.map(_._1), retry2Gc = spaced.flatMap(_._2))
+        firstPass = Some(t), retry = Some(r), retryProfile = rp,
+        retry2 = spaced.map(_._1), retry2Profile = spaced.flatMap(_._2))
     }
   }
 
@@ -200,12 +184,11 @@ object Bench {
     checkpoint("start")
     val timings = names.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx == names.size / 2) checkpoint("mid")
-      val g0 = gcTotalMs()
-      val t0 = System.nanoTime()
       val first = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        val probe = GcProbe(gcTotalMs() - g0, usedHeapGb())
+        // the profile's listener-bus drain and reads sit outside the
+        // timed window (secsOf times the query alone)
+        val (t, profile) = QueryProfile.measure(spark)(secsOf(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
         // operators persist their diamond intermediates (bigram tables,
         // shingle indexes); queries never unpersist — over 100+ queries
         // the stale blocks pile into executor memory and the GC/spill
@@ -219,7 +202,7 @@ object Bench {
         // 0.9s queries were recording 7s purely from inherited heap debt.
         dropAllBlocks()
         System.gc()
-        Timing(name, t, gc = Some(probe))
+        Timing(name, t, profile = Some(profile))
       } catch {
         case e: Throwable =>
           // best-effort: a clearCache failure after a query failure must
@@ -265,17 +248,14 @@ object Bench {
     * of [[run]] exactly.
     */
   def retime(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, name: String): (Double, Option[GcProbe]) = {
+      sfDir: String, name: String): (Double, Map[String, Double]) = {
     GraftSession.dropAllBlocks(spark)
     System.gc()
-    val g0 = gcTotalMs()
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    val t = (System.nanoTime() - t0) / 1e9
-    val probe = GcProbe(gcTotalMs() - g0, usedHeapGb())
+    val timed = QueryProfile.measure(spark)(secsOf(
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()))
     GraftSession.dropAllBlocks(spark)
-    (t, Some(probe))
+    timed
   }
 
   def main(args: Array[String]): Unit = {
@@ -332,26 +312,26 @@ object Bench {
     val errs = results.collect { case t if t.err.isDefined =>
       "\"" + esc(t.name) + "\":\"" + esc(t.err.get) + "\""
     }.mkString("{", ",", "}")
-    // per-query JVM-pressure evidence: GC ms inside the timed window +
-    // used heap at its end — the data PLANS.md cites when adjudicating
-    // shared-JVM flaps. Like every other object, emitted BEFORE
-    // "queries" (see the key-order note at the end of this method).
-    def probeJson(p: GcProbe): String =
-      "{\"gc_ms\":" + p.gcMs + ",\"heap_gb\":" + fmt(p.heapGb) + "}"
-    val gcs = results.collect { case t if t.gc.isDefined =>
-      "\"" + t.name + "\":" + probeJson(t.gc.get)
+    // per-query layered profile of the first pass (QueryProfile). Like
+    // every other object, emitted BEFORE "queries" (see the key-order
+    // note at the end of this method); its dotted keys never match
+    // BenchGuard's flat-pair shape.
+    val profiles = results.collect { case t if t.profile.isDefined =>
+      "\"" + t.name + "\":" + QueryProfile.json(t.profile.get)
     }.mkString("{", ",", "}")
     // first/retry/retry2 stay adjacent and first in the entry:
     // BenchGuard's last-resort replay fallback reads their minimum
     val retimed = results.collect {
       case t @ Timing(n, _, _, Some(f), Some(r), _, _, _, _) =>
-        def gcFields(label: String, p: Option[GcProbe]): String =
-          p.map(p => s""","${label}_gc_ms":""" + p.gcMs +
-            s""","${label}_heap_gb":""" + fmt(p.heapGb)).getOrElse("")
+        def gcFields(label: String, p: Option[Map[String, Double]]): String =
+          p.map(p => s""","${label}_gc_ms":""" +
+            math.round(p.getOrElse("jvm.gc_s", 0.0) * 1000) +
+            s""","${label}_heap_gb":""" + fmt(p.getOrElse("jvm.heap_used_gb", 0.0)))
+            .getOrElse("")
         "\"" + n + "\":{\"first\":" + fmt(f) + ",\"retry\":" + fmt(r) +
           t.retry2.map(v => ",\"retry2\":" + fmt(v)).getOrElse("") +
-          gcFields("first", t.gc) + gcFields("retry", t.retryGc) +
-          gcFields("retry2", t.retry2Gc) + "}"
+          gcFields("first", t.profile) + gcFields("retry", t.retryProfile) +
+          gcFields("retry2", t.retry2Profile) + "}"
     }.mkString("{", ",", "}")
     // flat calibration object: its keys never match BenchGuard's
     // query-name shape, so the truncated-artifact fallback grep cannot
@@ -387,6 +367,6 @@ object Bench {
     //     driver's metric read survives the same clip.
     // BenchGuardSpec round-trips a 241-query line through a 2 kB tail
     // clip to pin this contract.
-    s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env"gc":$gcs,"errors":$errs,"retimed":$retimed,$calObj"queries":$qs,"n_queries":${results.size},"value":${fmt(total)}}"""
+    s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env"profile":$profiles,"errors":$errs,"retimed":$retimed,$calObj"queries":$qs,"n_queries":${results.size},"value":${fmt(total)}}"""
   }
 }

@@ -1043,7 +1043,8 @@ object Dedup {
     * `hash(key) % buckets`, so mixing counts within one directory
     * would send probes to the wrong buckets and silently DROP
     * candidates (at scale, changing it is an offline re-bucketing
-    * compaction, not a config flip). Env-parameterised
+    * compaction, not a config flip); [[checkBucketCount]] enforces
+    * that per directory. Env-parameterised
     * (`SPARK_GRAFT_S20_BUCKETS`) because the right value is
     * SCALE-DERIVED, not constant: B ≈ ⌈index bytes / target bucket
     * bytes⌉ with a ~512 MB bucket target (guide §6 file sizing / §2
@@ -1068,14 +1069,43 @@ object Dedup {
   def stateBucket(key: Column, buckets: Int): Column =
     pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
 
+  /** Bucket-count manifest of the bucketed state at `dir`: the first
+    * append records `buckets` in `<dir>/_buckets` (the leading `_` keeps
+    * it out of every parquet read), and every later append and probe
+    * must pass the same count — a different one would route keys to
+    * the wrong buckets and silently drop candidates, so it fails loud
+    * instead. A dir with neither the manifest nor a `bucket=` dir is
+    * empty state and passes; bucket dirs without a manifest have an
+    * unknown count and fail.
+    */
+  private def checkBucketCount(dir: String, buckets: Int,
+      record: Boolean): Unit = {
+    val d = new java.io.File(dir)
+    val manifest = new java.io.File(d, "_buckets").toPath
+    if (java.nio.file.Files.isRegularFile(manifest)) {
+      val recorded = java.nio.file.Files.readString(manifest).trim.toInt
+      require(recorded == buckets, s"bucketed state $dir was written " +
+        s"with $recorded buckets but is accessed with $buckets")
+    } else {
+      require(!Option(d.listFiles()).exists(
+        _.exists(_.getName.startsWith("bucket="))),
+        s"bucketed state $dir has bucket dirs but no _buckets manifest")
+      if (record) {
+        d.mkdirs()
+        java.nio.file.Files.writeString(manifest, s"$buckets\n")
+      }
+    }
+  }
+
   /** Append rows into the `keyCol`-bucketed standing state at `dir`
-    * (layout: `bucket=<k>/part-*.parquet`). The repartition puts each
-    * bucket's rows in one task so a batch appends at most one file per
-    * touched bucket instead of tasks × buckets small files (guide §6
-    * output sizing).
+    * (layout: `bucket=<k>/part-*.parquet`, bucket count in
+    * `_buckets`). The repartition puts each bucket's rows in one task
+    * so a batch appends at most one file per touched bucket instead of
+    * tasks × buckets small files (guide §6 output sizing).
     */
   def appendBucketed(df: DataFrame, dir: String, keyCol: String,
       buckets: Int = indexBuckets): Unit = {
+    checkBucketCount(dir, buckets, record = true)
     if (buckets == 1)
       // single-bucket fast path: same bucket=0/ layout, none of the
       // dynamic-partition write machinery (every key hashes to 0)
@@ -1109,6 +1139,7 @@ object Dedup {
       probeKeys: DataFrame,
       emptyLike: DataFrame,
       buckets: Int = indexBuckets): DataFrame = {
+    checkBucketCount(dir, buckets, record = false)
     val key = col(probeKeys.columns.head)
     val bks: Seq[Int] =
       if (buckets == 1) Seq(0) // every key hashes to 0: no probe job

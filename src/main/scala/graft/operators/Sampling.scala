@@ -240,7 +240,7 @@ object Sampling {
     // the concat arg, both size() guards, and the bigram lambda's two
     // element_at calls, and Spark does not CSE across a generator
     // boundary — the split re-ran per lambda element (~tokens× per
-    // row; r17 DsirProfile receipts: 3.3 s → 0.8 s on this agg alone)
+    // row; r17 receipts, docs/PLANS.md: 3.3 s → 0.8 s on this agg alone)
     val bound = docs.select(col("doc_id"), isTarget.as("is_tgt"),
       split(col("text"), " ").as("ts"))
     val ts = col("ts")

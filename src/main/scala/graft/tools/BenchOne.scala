@@ -1,11 +1,13 @@
 package graft.tools
 
-import graft.GraftSession
-import graft.queries.Registry
+import graft.{Bench, GraftSession, QueryProfile}
 
-/** Repeat-bench for single queries: runs each named query `reps` times
-  * in one JVM (after one warmup) and prints min/median — min is the
-  * contention-robust statistic on a noisy host, median shows spread.
+/** Repeat-bench for single queries, measured exactly as Bench measures
+  * them: the warmup and every rep are one [[Bench.retime]] (drop every
+  * cached block, `System.gc()`, time the query into the noop sink), and
+  * each prints its wall time and [[QueryProfile]]. A closing line per
+  * query gives min/median over the reps — min is the contention-robust
+  * statistic on a noisy host, median shows spread.
   * Run: sbt "runMain graft.tools.BenchOne <sfDir> <reps> <query> [query ...]"
   */
 object BenchOne {
@@ -15,21 +17,14 @@ object BenchOne {
     val names = args.drop(2).toSeq
     require(names.nonEmpty, "usage: BenchOne <sfDir> <reps> <query> [query ...]")
     val spark = GraftSession.build("graft-bench-one")
-    spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
-      val fn = Registry.queries(name)
-      def once(): Double = {
-        // COLD=1 reproduces the Bench main's measurement (cache cleared
-        // before each run, so persisted diamond intermediates recompute;
-        // RDD-layer checkpoint blocks reaped too, same as Bench)
-        if (sys.env.get("SPARK_GRAFT_COLD").contains("1"))
-          GraftSession.dropAllBlocks(spark)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      def rep(label: String): Double = {
+        val (t, profile) = Bench.retime(spark, sfDir, name)
+        println(f"$name%-28s $label%-6s ${t}%.3fs ${QueryProfile.json(profile)}")
+        t
       }
-      once() // warmup
-      val times = Seq.fill(reps)(once()).sorted
+      rep("warmup")
+      val times = (1 to reps).map(i => rep(s"rep$i")).sorted
       println(f"$name%-28s min=${times.head}%.3f median=${times(times.size / 2)}%.3f reps=$reps")
     }
     spark.stop()

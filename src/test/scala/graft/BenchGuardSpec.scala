@@ -64,20 +64,29 @@ class BenchGuardSpec extends AnyFunSuite {
     // the whole queries map out of the tail — BenchGuard crashed on the
     // committed artifact. The key-order contract (queries second-to-
     // last, value last) means ANY tail clip now lands inside the
-    // queries map; this round-trips a registry-sized line with fully
-    // retimed entries and a calibration object through exactly that clip.
+    // queries map; this round-trips a registry-sized line with a full
+    // per-query profile, fully retimed entries and a calibration object
+    // through exactly that clip.
+    val profile = Some(scala.collection.immutable.VectorMap.from(
+      QueryProfile.keys.zipWithIndex.map { case (k, i) => k -> (i + 1) * 1.234 }))
     val plain = (1 to 229).map(i =>
-      Bench.Timing(f"n$i%03d_synthetic_query_name", i / 100.0))
-    val probe = Some(Bench.GcProbe(12345, 5.678))
+      Bench.Timing(f"n$i%03d_synthetic_query_name", i / 100.0,
+        profile = profile))
     val flapped = (1 to 12).map(i =>
       Bench.Timing(f"s$i%02d_retimed_query_name", 2.0,
-        firstPass = Some(9.987), retry = Some(8.765),
-        gc = probe, retryGc = probe, retry2 = Some(2.0), retry2Gc = probe))
+        firstPass = Some(9.987), retry = Some(8.765), profile = profile,
+        retryProfile = profile, retry2 = Some(2.0), retry2Profile = profile))
     val cal = Bench.Calibration(Seq("spin_start" -> 0.21,
       "scan_start" -> 0.34, "spin_mid" -> 0.22, "scan_mid" -> 0.35,
       "spin_end" -> 0.21, "scan_end" -> 0.36), Some(1.042))
     val results = plain ++ flapped
     val line = Bench.jsonLine(results, "/data/sf0.1", Some(cal))
+    assert(line.contains("\"profile\":{\"n001_synthetic_query_name\":" +
+      "{\"scheduler.jobs\":1.234,"), "the first query's profile leads the object")
+    assert("\"scheduler.jobs\":".r.findAllIn(line).size == results.size,
+      "every query carries its profile")
+    assert(line.indexOf("\"profile\":{") < line.indexOf("\"retimed\":{"),
+      "profile must precede retimed")
     assert(line.indexOf("\"calibration\":{") < line.indexOf("\"queries\":{"),
       "calibration must precede the queries map")
     assert(line.indexOf("\"queries\":{") > line.lastIndexOf("\"retry2\":"),
@@ -184,7 +193,7 @@ class BenchGuardSpec extends AnyFunSuite {
       var calls = 0
       var coolDowns = 0
       val t = Bench.confirm(Bench.Timing("q01_x", first), 5.0,
-        () => { calls += 1; (it.next(), None) }, () => coolDowns += 1)
+        () => { calls += 1; (it.next(), Map.empty) }, () => coolDowns += 1)
       (t, calls, coolDowns)
     }
     // at or under the ceiling: untouched, no re-time

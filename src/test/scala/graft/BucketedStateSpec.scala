@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`Dedup.appendBucketed` / `Dedup.readProbedBuckets`): probing must
   * return every state row whose key equals a probe key (pruning can
   * never drop a matching row), the single-bucket fast path must be
-  * layout-compatible with the multi-bucket path, and the probe must
-  * physically read only the probed bucket directories.
+  * layout-compatible with the multi-bucket path, the probe must
+  * physically read only the probed bucket directories, and the bucket
+  * count recorded on first append must match every later access.
   */
 class BucketedStateSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -76,6 +77,34 @@ class BucketedStateSpec extends AnyFunSuite {
       Seq("x", "z").toDF("band_key"), empty, buckets = 1)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L, 3L)) // B=1: everything in bucket 0
+  }
+
+  test("bucket count is recorded on first append; a different count fails loud") {
+    val dir = tmp()
+    val state = (0L until 20L)
+      .map(i => (i, s"key-$i")).toDF("doc_id", "band_key")
+    D.appendBucketed(state, dir, "band_key", buckets = 4)
+    val manifest = java.nio.file.Paths.get(dir, "_buckets")
+    assert(java.nio.file.Files.readString(manifest).trim == "4")
+    val empty = state.filter(lit(false))
+    val probe = Seq("key-3").toDF("band_key")
+    def expectMismatch(body: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(dir) &&
+        e.getMessage.contains("with 4 buckets") &&
+        e.getMessage.contains("accessed with 8"), e.getMessage)
+    }
+    expectMismatch(D.readProbedBuckets(spark, dir, probe, empty, buckets = 8))
+    expectMismatch(D.appendBucketed(state, dir, "band_key", buckets = 8))
+    // the matching count still probes, and the manifest stays out of
+    // the parquet read
+    assert(D.readProbedBuckets(spark, dir, probe, empty, buckets = 4)
+      .join(probe, "band_key").count() == 1)
+    // bucket dirs whose count was never recorded are refused too
+    java.nio.file.Files.delete(manifest)
+    val e = intercept[IllegalArgumentException](
+      D.readProbedBuckets(spark, dir, probe, empty, buckets = 4))
+    assert(e.getMessage.contains("no _buckets manifest"), e.getMessage)
   }
 
   test("missing state dir yields the empty schema frame") {
